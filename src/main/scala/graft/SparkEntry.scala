@@ -2248,20 +2248,13 @@ object SparkEntry {
         .select(d, col("text").cast("binary").as("payload"))
       val mixed = (familyLanes :+ textLane).reduce(_.unionAll(_))
         .repartition(s.sparkContext.defaultParallelism)
-      // localCheckpoint, not persist (r16): the triage chain creates
-      // ~200 Datasets (19 family parses × ~10 withColumns), and every
-      // creation re-runs analysis/CheckAnalysis over the WHOLE
-      // accumulated plan — with the 18-lane synth union under it, the
-      // row spent more driver time CONSTRUCTING the frame than
-      // executing it (measured: 7.4 s construct / 2.2 s of Spark
-      // executions warm; the checkpoint truncates the corpus to a
-      // leaf: 3.9 s construct, serve 3.8 → 1.2 s). Same eager
-      // materialization the persist+count gave, so the synth lanes
-      // still run exactly once.
-      val corpus = mixed.localCheckpoint(true)
+      // The corpus is persisted and materialized once, so the synth
+      // lanes run exactly once; its lineage stays intact, so an
+      // evicted block recomputes from the synth lanes.
+      val corpus = graft.ops.Caching.materialized(mixed)(())
       graft.ops.Caching.materialized(
         Binary.triage(corpus).orderBy(d)) {
-        graft.ops.Caching.releaseCheckpoint(corpus)
+        corpus.unpersist(false)
       }
     }),
     // Avro OCF container triage — the FIFTEENTH family (r15): varint

@@ -1,5 +1,7 @@
 package graft.multimodal
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -27,6 +29,58 @@ object Binary {
       lit("text/plain").as("media_type"),
       length(col("text").cast("binary")).cast("long").as("n_bytes"))
 
+  /** A container family's header parse as named Columns over the
+    * payload. [[fields]] is the ordered list [[parse]] adds: the first
+    * field is the family's validity flag, and `unitsField` names its
+    * content measure (what [[triage]] reports as `content_units`).
+    * Every field stands on its own — none refers to another field or
+    * to a temporary column — so [[parse]] is ONE `withColumns`
+    * projection (one analysis pass), and [[triage]] routes on any
+    * family's Columns directly inside a single `select`.
+    */
+  sealed abstract class Family(val label: String, unitsField: String) {
+    def fields(p: Column): Seq[(String, Column)]
+
+    def valid(p: Column): Column = fields(p).head._2
+
+    def units(p: Column): Column =
+      fields(p).collectFirst { case (`unitsField`, c) => c }.get
+
+    /** Add [[fields]] over `payloadCol` to `media`, in order. */
+    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame =
+      media.withColumns(ListMap(fields(col(payloadCol)): _*))
+  }
+
+  // byte helpers shared by the parse fields and the synths
+  private def magic(payload: Column, off: Int, s: String): Column =
+    substring(payload, off, s.length) === lit(s.getBytes("US-ASCII"))
+
+  private def asciiHex(s: String): Column =
+    lit(s.getBytes("US-ASCII").map("%02X".format(_)).mkString)
+
+  /** Big-endian hex of an integral column, `n` bytes. */
+  private def beHex(v: Column, n: Int): Column = lpad(hex(v), n * 2, "0")
+
+  /** Little-endian hex of an integral column, `n` bytes. */
+  private def leHex(v: Column, n: Int): Column = {
+    val be = beHex(v, n)
+    concat((n - 1 to 0 by -1).map(i => substring(be, i * 2 + 1, 2)): _*)
+  }
+
+  /** SQL `a div b` — exact integral division (Column `/` is double). */
+  private def div(a: Column, b: Column): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(
+      org.apache.spark.sql.catalyst.expressions.IntegralDivide(
+        org.apache.spark.sql.GraftColumnBridge.expression(a),
+        org.apache.spark.sql.GraftColumnBridge.expression(b)))
+
+  /** Struct-kernel fields read by name. The kernel Column repeats in
+    * every field; the projection's common-subexpression elimination
+    * evaluates it once per row.
+    */
+  private def fieldsOf(kernel: Column, names: String*): Seq[(String, Column)] =
+    names.map(n => n -> kernel.getField(n))
+
   /** WAV (RIFF/PCM) container header codec, entirely in Catalyst
     * expressions. The canonical 44-byte PCM layout (RIFF chunk, `fmt `
     * subchunk of size 16, `data` subchunk immediately after — the
@@ -37,7 +91,7 @@ object Binary {
     * beyond-reference piece a multimodal corpus needs before any
     * sample-level decode.
     */
-  object Wav {
+  object Wav extends Family("wav", "duration_ms") {
     /** Little-endian unsigned int read: `n` bytes at 1-based byte
       * offset `off`. Byte-swaps via per-byte `hex` then one `conv`
       * base-16 parse — all codegen'd string ops on ≤4-byte slices.
@@ -46,19 +100,8 @@ object Binary {
       conv(concat((off + n - 1 to off by -1).map(i => hex(substring(payload, i, 1))): _*),
         16, 10).cast("long")
 
-    private def magic(payload: Column, off: Int, s: String): Column =
-      substring(payload, off, s.length) === lit(s.getBytes("US-ASCII"))
-
-    /** Little-endian hex encoding of an integral column, `n` bytes. */
-    private def leHex(v: Column, n: Int): Column = {
-      val be = lpad(hex(v), n * 2, "0")
-      concat((n - 1 to 0 by -1).map(i => substring(be, i * 2 + 1, 2)): _*)
-    }
-    private def asciiHex(s: String): Column =
-      lit(s.getBytes("US-ASCII").map("%02X".format(_)).mkString)
-
-    /** Parse the canonical PCM header from `payloadCol`. Adds:
-      * `wav_valid` (structure: magics + PCM format + fmt size 16),
+    /** The canonical PCM header fields: `wav_valid` (structure:
+      * magics + PCM format + fmt size 16),
       * `channels`/`sample_rate`/`byte_rate`/`block_align`/
       * `bits_per_sample`/`data_bytes` (null unless valid),
       * `duration_ms` (data_bytes·1000 div byte_rate, exact integer
@@ -67,8 +110,7 @@ object Binary {
       * channels·bits, riff size and data size match the payload).
       * A pure projection — zero shuffles at any scale.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val p = col(payloadCol)
+    def fields(p: Column): Seq[(String, Column)] = {
       val valid = (length(p) >= 44) && magic(p, 1, "RIFF") && magic(p, 9, "WAVE") &&
         magic(p, 13, "fmt ") && (leUint(p, 17, 4) === 16) && (leUint(p, 21, 2) === 1) &&
         magic(p, 37, "data")
@@ -76,18 +118,17 @@ object Binary {
         (leUint(p, 33, 2) * 8 === leUint(p, 23, 2) * leUint(p, 35, 2)) &&
         (leUint(p, 5, 4) === leUint(p, 41, 4) + 36) &&
         (leUint(p, 41, 4) === length(p) - 44)
-      media
-        .withColumn("wav_valid", valid)
-        .withColumn("channels", when(valid, leUint(p, 23, 2)))
-        .withColumn("sample_rate", when(valid, leUint(p, 25, 4)))
-        .withColumn("byte_rate", when(valid, leUint(p, 29, 4)))
-        .withColumn("block_align", when(valid, leUint(p, 33, 2)))
-        .withColumn("bits_per_sample", when(valid, leUint(p, 35, 2)))
-        .withColumn("data_bytes", when(valid, leUint(p, 41, 4)))
-        .withColumn("duration_ms",
-          when(valid && leUint(p, 29, 4) > 0,
-            expr("(data_bytes * 1000) div byte_rate")))
-        .withColumn("header_consistent", when(valid, consistent))
+      Seq(
+        "wav_valid" -> valid,
+        "channels" -> when(valid, leUint(p, 23, 2)),
+        "sample_rate" -> when(valid, leUint(p, 25, 4)),
+        "byte_rate" -> when(valid, leUint(p, 29, 4)),
+        "block_align" -> when(valid, leUint(p, 33, 2)),
+        "bits_per_sample" -> when(valid, leUint(p, 35, 2)),
+        "data_bytes" -> when(valid, leUint(p, 41, 4)),
+        "duration_ms" -> when(valid && leUint(p, 29, 4) > 0,
+          div(leUint(p, 41, 4) * 1000, leUint(p, 29, 4))),
+        "header_consistent" -> when(valid, consistent))
     }
 
     /** Sample-level PCM feature extraction — the DECODE step past the
@@ -219,25 +260,15 @@ object Binary {
     * as opaque blobs (`io/parquet.py`); header triage is the
     * beyond-reference multimodal piece.
     */
-  object Png {
+  object Png extends Family("png", "n_pixels") {
     /** Big-endian unsigned int read: `n` bytes at 1-based offset
       * `off` — one `hex` + one `conv`, no byte swap (network order).
       */
     def beUint(payload: Column, off: Int, n: Int): Column =
       conv(hex(substring(payload, off, n)), 16, 10).cast("long")
 
-    private def magic(payload: Column, off: Int, s: String): Column =
-      substring(payload, off, s.length) === lit(s.getBytes("US-ASCII"))
-
     private[multimodal] val Signature: Array[Byte] =
       Array(0x89.toByte, 'P'.toByte, 'N'.toByte, 'G'.toByte, 0x0D, 0x0A, 0x1A, 0x0A)
-
-    /** Big-endian hex of an integral column, `n` bytes. */
-    private def beHex(v: Column, n: Int): Column = lpad(hex(v), n * 2, "0")
-    private def asciiHex(s: String): Column =
-      lit(s.getBytes("US-ASCII").map("%02X".format(_)).mkString)
-    private[multimodal] def beHexPub(v: Column, n: Int): Column = beHex(v, n)
-    private[multimodal] def asciiHexPub(s: String): Column = asciiHex(s)
 
     /** Samples per pixel for each PNG color type (spec §11.2.2). */
     private def channelsOf(ct: Column): Column =
@@ -250,20 +281,19 @@ object Binary {
         (ct === 3 && depth.isin(1L, 2L, 4L, 8L)) ||
         (ct.isin(2L, 4L, 6L) && depth.isin(8L, 16L))
 
-    /** Parse signature + IHDR (+ the first data chunk) from
-      * `payloadCol`. Adds: `png_valid` (signature, IHDR length 13 and
-      * magic, positive dimensions), `width`/`height`/`bit_depth`/
-      * `color_type`/`interlace`/`channels`/`n_pixels` (null unless
-      * valid), `idat_bytes` (declared length of the first chunk after
-      * IHDR when it is an IDAT), `ihdr_crc_ok` (stored CRC equals
-      * `crc32` recomputed over type+data — real integrity, not
-      * structure), and `header_consistent` (compression and filter
-      * methods 0, interlace ≤ 1, depth legal for the color type, file
-      * length accounts for sig + IHDR + IDAT + IEND). A pure
-      * projection — zero shuffles at any scale.
+    /** Signature + IHDR (+ the first data chunk) fields: `png_valid`
+      * (signature, IHDR length 13 and magic, positive dimensions),
+      * `width`/`height`/`bit_depth`/`color_type`/`interlace`/
+      * `channels`/`n_pixels` (null unless valid), `idat_bytes`
+      * (declared length of the first chunk after IHDR when it is an
+      * IDAT), `ihdr_crc_ok` (stored CRC equals `crc32` recomputed over
+      * type+data — real integrity, not structure), and
+      * `header_consistent` (compression and filter methods 0,
+      * interlace ≤ 1, depth legal for the color type, file length
+      * accounts for sig + IHDR + IDAT + IEND). A pure projection —
+      * zero shuffles at any scale.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val p = col(payloadCol)
+    def fields(p: Column): Seq[(String, Column)] = {
       val valid = (length(p) >= 45) && (substring(p, 1, 8) === lit(Signature)) &&
         (beUint(p, 9, 4) === 13) && magic(p, 13, "IHDR") &&
         (beUint(p, 17, 4) > 0) && (beUint(p, 21, 4) > 0)
@@ -273,19 +303,18 @@ object Binary {
       val consistent = (beUint(p, 27, 1) === 0) && (beUint(p, 28, 1) === 0) &&
         (beUint(p, 29, 1) <= 1) && depthLegal(depth, ct) &&
         (idat.isNotNull && length(p) === idat + 57)
-      media
-        .withColumn("png_valid", valid)
-        .withColumn("width", when(valid, beUint(p, 17, 4)))
-        .withColumn("height", when(valid, beUint(p, 21, 4)))
-        .withColumn("bit_depth", when(valid, depth))
-        .withColumn("color_type", when(valid, ct))
-        .withColumn("interlace", when(valid, beUint(p, 29, 1)))
-        .withColumn("channels", when(valid, channelsOf(ct)))
-        .withColumn("n_pixels", when(valid, beUint(p, 17, 4) * beUint(p, 21, 4)))
-        .withColumn("idat_bytes", when(valid, idat))
-        .withColumn("ihdr_crc_ok",
-          when(valid, beUint(p, 30, 4) === crc32(substring(p, 13, 17))))
-        .withColumn("header_consistent", when(valid, consistent))
+      Seq(
+        "png_valid" -> valid,
+        "width" -> when(valid, beUint(p, 17, 4)),
+        "height" -> when(valid, beUint(p, 21, 4)),
+        "bit_depth" -> when(valid, depth),
+        "color_type" -> when(valid, ct),
+        "interlace" -> when(valid, beUint(p, 29, 1)),
+        "channels" -> when(valid, channelsOf(ct)),
+        "n_pixels" -> when(valid, beUint(p, 17, 4) * beUint(p, 21, 4)),
+        "idat_bytes" -> when(valid, idat),
+        "ihdr_crc_ok" -> when(valid, beUint(p, 30, 4) === crc32(substring(p, 13, 17))),
+        "header_consistent" -> when(valid, consistent))
     }
 
     /** Deterministic PNG corpus from the documents table: IHDR fields
@@ -395,21 +424,21 @@ object Binary {
             d.cast("long"),
             when(interlaced, lit(1L)).otherwise(lit(0L)))))))
         .withColumn("__idat", gcol(ZlibDeflate(gexpr(col("__rawbin")))))
-      val ihdrTypeData = concat(Png.asciiHexPub("IHDR"),
-        Png.beHexPub(col("__w"), 4), Png.beHexPub(col("__h"), 4),
-        Png.beHexPub(lit(8L), 1), Png.beHexPub(lit(2L), 1),
-        Png.beHexPub(lit(0L), 1), Png.beHexPub(lit(0L), 1),
-        Png.beHexPub(when(interlaced, lit(1L)).otherwise(lit(0L)), 1))
+      val ihdrTypeData = concat(asciiHex("IHDR"),
+        beHex(col("__w"), 4), beHex(col("__h"), 4),
+        beHex(lit(8L), 1), beHex(lit(2L), 1),
+        beHex(lit(0L), 1), beHex(lit(0L), 1),
+        beHex(when(interlaced, lit(1L)).otherwise(lit(0L)), 1))
       val idatHex = hex(col("__idat"))
-      val idatTypeData = concat(Png.asciiHexPub("IDAT"), idatHex)
+      val idatTypeData = concat(asciiHex("IDAT"), idatHex)
       val pngHex = concat(
         lit(Png.Signature.map("%02X".format(_)).mkString),
-        Png.beHexPub(lit(13L), 4), ihdrTypeData,
-        Png.beHexPub(crc32(unhex(ihdrTypeData)), 4),
-        Png.beHexPub((length(idatHex) / 2).cast("long"), 4), idatTypeData,
-        Png.beHexPub(crc32(unhex(idatTypeData)), 4),
-        Png.beHexPub(lit(0L), 4), Png.asciiHexPub("IEND"),
-        Png.beHexPub(crc32(unhex(Png.asciiHexPub("IEND"))), 4))
+        beHex(lit(13L), 4), ihdrTypeData,
+        beHex(crc32(unhex(ihdrTypeData)), 4),
+        beHex((length(idatHex) / 2).cast("long"), 4), idatTypeData,
+        beHex(crc32(unhex(idatTypeData)), 4),
+        beHex(lit(0L), 4), asciiHex("IEND"),
+        beHex(crc32(unhex(asciiHex("IEND"))), 4))
       staged.select(
         d,
         when(d % invalidEvery === 0, col("text").cast("binary"))
@@ -479,29 +508,25 @@ object Binary {
     * PNG. Reference treats payloads as opaque blobs (`io/parquet.py`);
     * header triage is the beyond-reference multimodal piece.
     */
-  object Jpeg {
+  object Jpeg extends Family("jpeg", "n_pixels") {
     /** Big-endian unsigned int read at a COLUMN offset (1-based) —
       * the relative-addressing twin of [[Png.beUint]].
       */
     def beUintAt(payload: Column, off: Column, n: Int): Column =
       conv(hex(payload.substr(off.cast("int"), lit(n))), 16, 10).cast("long")
 
-    /** Big-endian hex of an integral column, `n` bytes. */
-    private def beHex(v: Column, n: Int): Column = lpad(hex(v), n * 2, "0")
-
-    /** Parse the frame header fields from `payloadCol`. Adds:
-      * `jpeg_valid` (SOI magic + a SOFn marker located before the
-      * scan data), `sof_offset` (the VARIABLE 1-based marker offset —
-      * surfacing it makes the walk itself oracle-checkable),
-      * `progressive` (SOF2 vs SOF0), `jfif_present` (APP0/JFIF
-      * directly after SOI), `precision_bits`/`height`/`width`/
-      * `n_components`/`n_pixels`, and `header_consistent` (declared
-      * SOF length = 8 + 3·components, legal precision and component
-      * count, positive dimensions, frame header fits the payload).
-      * A pure projection — zero shuffles at any scale.
+    /** Frame header fields: `jpeg_valid` (SOI magic + a SOFn marker
+      * located before the scan data), `sof_offset` (the VARIABLE
+      * 1-based marker offset — surfacing it makes the walk itself
+      * oracle-checkable), `progressive` (SOF2 vs SOF0),
+      * `jfif_present` (APP0/JFIF directly after SOI),
+      * `precision_bits`/`height`/`width`/`n_components`/`n_pixels`,
+      * and `header_consistent` (declared SOF length = 8 +
+      * 3·components, legal precision and component count, positive
+      * dimensions, frame header fits the payload). A pure projection
+      * — zero shuffles at any scale.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val p = col(payloadCol)
+    def fields(p: Column): Seq[(String, Column)] = {
       val off = GraftFunctions.jpeg_sof_offset(p)
       val valid = off.isNotNull
       val marker = beUintAt(p, off + 1, 1)
@@ -515,17 +540,17 @@ object Binary {
       val consistent = (sofLen === ncomp * 3 + 8) && precision.isin(8L, 12L) &&
         ncomp.isin(1L, 3L, 4L) && (width > 0) && (height > 0) &&
         (off + 1 + sofLen <= length(p))
-      media
-        .withColumn("jpeg_valid", valid)
-        .withColumn("sof_offset", when(valid, off))
-        .withColumn("progressive", when(valid, marker === lit(0xC2L)))
-        .withColumn("jfif_present", when(valid, jfif))
-        .withColumn("precision_bits", when(valid, precision))
-        .withColumn("height", when(valid, height))
-        .withColumn("width", when(valid, width))
-        .withColumn("n_components", when(valid, ncomp))
-        .withColumn("n_pixels", when(valid, width * height))
-        .withColumn("header_consistent", when(valid, consistent))
+      Seq(
+        "jpeg_valid" -> valid,
+        "sof_offset" -> when(valid, off),
+        "progressive" -> when(valid, marker === lit(0xC2L)),
+        "jfif_present" -> when(valid, jfif),
+        "precision_bits" -> when(valid, precision),
+        "height" -> when(valid, height),
+        "width" -> when(valid, width),
+        "n_components" -> when(valid, ncomp),
+        "n_pixels" -> when(valid, width * height),
+        "header_consistent" -> when(valid, consistent))
     }
 
     /** Deterministic JPEG corpus from the documents table: SOI, a
@@ -723,28 +748,21 @@ object Binary {
     def synthExifFromDocs(docs: DataFrame, invalidEvery: Int = 10): DataFrame = {
       val d = col("doc_id")
       val le = d % 2 === 1
-      def beH(v: Column, n: Int): Column = lpad(hex(v), n * 2, "0")
-      def leH(v: Column, n: Int): Column = {
-        val be = beH(v, n)
-        concat((n - 1 to 0 by -1).map(i => substring(be, i * 2 + 1, 2)): _*)
-      }
-      def x16(v: Column): Column = when(le, leH(v, 2)).otherwise(beH(v, 2))
-      def x32(v: Column): Column = when(le, leH(v, 4)).otherwise(beH(v, 4))
-      def aH(s: String): Column =
-        lit(s.getBytes("US-ASCII").map("%02X".format(_)).mkString)
+      def x16(v: Column): Column = when(le, leHex(v, 2)).otherwise(beHex(v, 2))
+      def x32(v: Column): Column = when(le, leHex(v, 4)).otherwise(beHex(v, 4))
       val hasGps = d % 3 === 0
       val nEntries = when(hasGps, lit(4L)).otherwise(lit(3L))
       val da = lit(14L) + nEntries * 12 // make-string data offset
       val gOff = da + 5 // GPS sub-IFD right after the make string
       val latOff = gOff + 2 + 4 * 12 + 4 // 4 GPS entries + next-IFD 0
       val lonOff = latOff + 24
-      val makeDigit = beH(lit(48L) + d % 5, 1) // ascii '0'+d%5
-      val modelDigit = beH(lit(48L) + d % 7, 1)
+      val makeDigit = beHex(lit(48L) + d % 5, 1) // ascii '0'+d%5
+      val modelDigit = beHex(lit(48L) + d % 7, 1)
       def entry(tag: Long, typ: Long, cnt: Long, valueHex: Column): Column =
         concat(x16(lit(tag)), x16(lit(typ)), x32(lit(cnt)), valueHex)
       val entries = concat(
         entry(0x010F, 2, 5, x32(da)), // Make: offset-addressed
-        entry(0x0110, 2, 3, concat(aH("M"), modelDigit, lit("0000"))), // inline
+        entry(0x0110, 2, 3, concat(asciiHex("M"), modelDigit, lit("0000"))), // inline
         entry(0x0112, 3, 1, concat(x16(lit(1L) + d % 8), lit("0000"))),
         when(hasGps, entry(0x8825, 4, 1, x32(gOff))).otherwise(lit("")))
       // GPS sub-IFD (planted only on the gps lane): refs vary WITHIN
@@ -756,29 +774,29 @@ object Binary {
       val lonRefW = expr("(doc_id div 3) % 2 = 1")
       val gpsIfd = concat(
         x16(lit(4L)),
-        entry(1, 2, 2, concat(when(latRefS, aH("S")).otherwise(aH("N")),
+        entry(1, 2, 2, concat(when(latRefS, asciiHex("S")).otherwise(asciiHex("N")),
           lit("000000"))),
         entry(2, 5, 3, x32(latOff)),
-        entry(3, 2, 2, concat(when(lonRefW, aH("W")).otherwise(aH("E")),
+        entry(3, 2, 2, concat(when(lonRefW, asciiHex("W")).otherwise(asciiHex("E")),
           lit("000000"))),
         entry(4, 5, 3, x32(lonOff)),
         lit("00000000"),
         rat(d % 90, 1), rat((d * 7) % 60, 1), rat((d * 13) % 600, 10),
         rat(d % 180, 1), rat((d * 11) % 60, 1), rat((d * 17) % 600, 10))
       val tiff = concat(
-        when(le, aH("II")).otherwise(aH("MM")), x16(lit(42L)), x32(lit(8L)),
+        when(le, asciiHex("II")).otherwise(asciiHex("MM")), x16(lit(42L)), x32(lit(8L)),
         x16(nEntries), entries, lit("00000000"),
-        aH("Cam"), makeDigit, lit("00"),
+        asciiHex("Cam"), makeDigit, lit("00"),
         when(hasGps, gpsIfd).otherwise(lit("")))
       val tiffLen = when(hasGps, lonOff + 24).otherwise(da + 5)
-      val app1 = concat(lit("FFE1"), beH(tiffLen + 8, 2),
-        aH("Exif"), lit("0000"), tiff)
+      val app1 = concat(lit("FFE1"), beHex(tiffLen + 8, 2),
+        asciiHex("Exif"), lit("0000"), tiff)
       val app0 = lit("FFE0" + "0010" + "4A46494600" + "0101" + "00" +
         "0001" + "0001" + "00" + "00")
       // COM data: 4 text bytes + 1 varying byte + NUL = 6, len = 8
-      val com = when(d % 4 === 0, concat(lit("FFFE"), beH(lit(8L), 2),
+      val com = when(d % 4 === 0, concat(lit("FFFE"), beHex(lit(8L), 2),
         hex(substring(col("text"), 1, 4).cast("binary")),
-        beH(d % 9, 1), lit("00"))).otherwise(lit(""))
+        beHex(d % 9, 1), lit("00"))).otherwise(lit(""))
       val withExif = concat(lit("FFD8"), app0, com, app1, lit("FFD9"))
       val noExif = concat(lit("FFD8"), app0, lit("FFD9"))
       docs.select(
@@ -865,27 +883,10 @@ object Binary {
     * stride `((width·bpp + 31) div 32)·4` must reconcile the declared
     * image size, the data offset, and the physical payload length.
     */
-  object Bmp {
-    /** Little-endian hex of an integral column, `n` bytes. */
-    private[multimodal] def leHex(v: Column, n: Int): Column = {
-      val be = lpad(hex(v), n * 2, "0")
-      concat((n - 1 to 0 by -1).map(i => substring(be, i * 2 + 1, 2)): _*)
-    }
-    private def asciiHex(s: String): Column =
-      lit(s.getBytes("US-ASCII").map("%02X".format(_)).mkString)
-
+  object Bmp extends Family("bmp", "n_pixels") {
     private[multimodal] def isBmp(p: Column): Column =
       length(p) >= 54 && substring(p, 1, 2) === lit("BM".getBytes("US-ASCII"))
 
-    /** Parse the canonical BITMAPINFOHEADER layout from `payloadCol`.
-      * Adds: `bmp_valid` (magic, DIB size 40, one plane, positive
-      * dimensions), `width`/`height`/`bits_per_pixel`/`compression`/
-      * `data_offset`/`image_bytes`/`row_stride`/`n_pixels` (null
-      * unless valid), and `header_consistent` (uncompressed BI_RGB,
-      * a true-color bpp, data at offset 54, image size = aligned
-      * stride × height, declared file size = 54 + image size = the
-      * physical payload length). A pure projection — zero shuffles.
-      */
     /** Sign-extended little-endian int32 read: real-world BMPs encode
       * top-down row order as a NEGATIVE height, which an unsigned read
       * would misreport as a ~4e9 "valid" height.
@@ -895,8 +896,16 @@ object Binary {
       when(u >= (1L << 31), u - (1L << 32)).otherwise(u)
     }
 
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val p = col(payloadCol)
+    /** The canonical BITMAPINFOHEADER fields: `bmp_valid` (magic, DIB
+      * size 40, one plane, positive dimensions), `width`/`height`/
+      * `bits_per_pixel`/`compression`/`data_offset`/`image_bytes`/
+      * `row_stride`/`n_pixels` (null unless valid), and
+      * `header_consistent` (uncompressed BI_RGB, a true-color bpp,
+      * data at offset 54, image size = aligned stride × height,
+      * declared file size = 54 + image size = the physical payload
+      * length). A pure projection — zero shuffles.
+      */
+    def fields(p: Column): Seq[(String, Column)] = {
       import Wav.leUint
       val widthS = leSint32(p, 19)
       val heightS = leSint32(p, 23)
@@ -914,18 +923,18 @@ object Binary {
         (leUint(p, 35, 4) === stride.cast("long") * height) &&
         (leUint(p, 3, 4) === leUint(p, 35, 4) + 54) &&
         (length(p) === leUint(p, 3, 4))
-      media
-        .withColumn("bmp_valid", valid)
-        .withColumn("width", when(valid, width))
-        .withColumn("height", when(valid, height))
-        .withColumn("bmp_top_down", when(valid, heightS < 0))
-        .withColumn("bits_per_pixel", when(valid, bpp))
-        .withColumn("compression", when(valid, leUint(p, 31, 4)))
-        .withColumn("data_offset", when(valid, leUint(p, 11, 4)))
-        .withColumn("image_bytes", when(valid, leUint(p, 35, 4)))
-        .withColumn("row_stride", when(valid, stride.cast("long")))
-        .withColumn("n_pixels", when(valid, width * height))
-        .withColumn("header_consistent", when(valid, consistent))
+      Seq(
+        "bmp_valid" -> valid,
+        "width" -> when(valid, width),
+        "height" -> when(valid, height),
+        "bmp_top_down" -> when(valid, heightS < 0),
+        "bits_per_pixel" -> when(valid, bpp),
+        "compression" -> when(valid, leUint(p, 31, 4)),
+        "data_offset" -> when(valid, leUint(p, 11, 4)),
+        "image_bytes" -> when(valid, leUint(p, 35, 4)),
+        "row_stride" -> when(valid, stride.cast("long")),
+        "n_pixels" -> when(valid, width * height),
+        "header_consistent" -> when(valid, consistent))
     }
 
     /** Pixel-level decode for uncompressed 24-bpp BMPs — the image
@@ -1014,17 +1023,14 @@ object Binary {
     * Spark parses the actual bytes, so a hash match proves the
     * byte-level read.
     */
-  object Gif {
-    private def asciiHex(s: String): Column =
-      lit(s.getBytes("US-ASCII").map("%02X".format(_)).mkString)
-
+  object Gif extends Family("gif", "n_pixels") {
     private[multimodal] def isGif(p: Column): Column =
       length(p) >= 14 &&
         substring(p, 1, 4) === lit("GIF8".getBytes("US-ASCII")) &&
         (substring(p, 5, 2) === lit("7a".getBytes("US-ASCII")) ||
           substring(p, 5, 2) === lit("9a".getBytes("US-ASCII")))
 
-    /** Parse the 13-byte header + logical screen descriptor. Adds:
+    /** The 13-byte header + logical screen descriptor fields:
       * `gif_valid`, `version` ('87a'/'89a'), `width`/`height`
       * (u16le), `has_gct`, `gct_entries`/`gct_bytes` (2^(bits+1)
       * entries × 3, null without a GCT), `bg_index`, and
@@ -1032,34 +1038,33 @@ object Binary {
       * the physical length is exactly header + GCT + trailer — the
       * minimal-stream layout the synth writes). Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val p = col(payloadCol)
+    def fields(p: Column): Seq[(String, Column)] = {
       import Wav.leUint
       val width = leUint(p, 7, 2)
       val height = leUint(p, 9, 2)
       val packed = leUint(p, 11, 1)
       val hasGct = packed >= 128
-      val gctEntries = expr("shiftleft(1L, cast(pmod(__gif_packed, 8) + 1 as int))")
+      val gctEntries = org.apache.spark.sql.GraftColumnBridge.column(
+        org.apache.spark.sql.catalyst.expressions.ShiftLeft(
+          org.apache.spark.sql.GraftColumnBridge.expression(lit(1L)),
+          org.apache.spark.sql.GraftColumnBridge.expression(
+            (pmod(packed, lit(8)) + 1).cast("int"))))
       val valid = isGif(p) && width > 0 && height > 0
-      val staged = media.withColumn("__gif_packed", packed)
       val gctBytes = when(hasGct, gctEntries * 3L).otherwise(0L)
       val consistent =
         substring(p, -1, 1) === lit(Array(0x3B.toByte)) &&
           length(p).cast("long") === lit(13L) + gctBytes + 1L
-      staged
-        .withColumn("gif_valid", valid)
-        .withColumn("version",
-          when(valid, concat(lit("8"),
-            substring(p, 5, 2).cast("string"))))
-        .withColumn("width", when(valid, width))
-        .withColumn("height", when(valid, height))
-        .withColumn("has_gct", when(valid, hasGct))
-        .withColumn("gct_entries", when(valid && hasGct, gctEntries))
-        .withColumn("gct_bytes", when(valid && hasGct, gctEntries * 3L))
-        .withColumn("bg_index", when(valid, leUint(p, 12, 1)))
-        .withColumn("n_pixels", when(valid, width * height))
-        .withColumn("header_consistent", when(valid, consistent))
-        .drop("__gif_packed")
+      Seq(
+        "gif_valid" -> valid,
+        "version" -> when(valid, concat(lit("8"), substring(p, 5, 2).cast("string"))),
+        "width" -> when(valid, width),
+        "height" -> when(valid, height),
+        "has_gct" -> when(valid, hasGct),
+        "gct_entries" -> when(valid && hasGct, gctEntries),
+        "gct_bytes" -> when(valid && hasGct, gctEntries * 3L),
+        "bg_index" -> when(valid, leUint(p, 12, 1)),
+        "n_pixels" -> when(valid, width * height),
+        "header_consistent" -> when(valid, consistent))
     }
 
     /** Channel statistics via a REAL LZW decode of the first image —
@@ -1122,12 +1127,12 @@ object Binary {
       val packed = lit(240L) + bits.cast("long") // GCT flag + colres 7 + size
       val gifHex = concat(
         asciiHex("GIF89a"),
-        Bmp.leHex(iw, 2), Bmp.leHex(ih, 2), Bmp.leHex(packed, 1),
-        Bmp.leHex(lit(0L), 1), Bmp.leHex(lit(0L), 1),
+        leHex(iw, 2), leHex(ih, 2), leHex(packed, 1),
+        leHex(lit(0L), 1), leHex(lit(0L), 1),
         col("__gct_hex"),
-        lit("2C"), Bmp.leHex(lit(0L), 2), Bmp.leHex(lit(0L), 2),
-        Bmp.leHex(iw, 2), Bmp.leHex(ih, 2), Bmp.leHex(lit(0L), 1),
-        Bmp.leHex(d % 3 + 2, 1), // LZW minimum code size
+        lit("2C"), leHex(lit(0L), 2), leHex(lit(0L), 2),
+        leHex(iw, 2), leHex(ih, 2), leHex(lit(0L), 1),
+        leHex(d % 3 + 2, 1), // LZW minimum code size
         lzwHex, lit("3B"))
       staged.select(d,
         when(d % invalidEvery === 0, col("text").cast("binary"))
@@ -1216,8 +1221,8 @@ object Binary {
             s"cast((CASE WHEN doc_id % 3 <> 0 THEN shiftleft(1L, cast(doc_id % 8 + 1 as int)) * 3 ELSE 0 END) * 2 as int), '0')"))
       val ver = when(d % 2 === 0, asciiHex("GIF89a")).otherwise(asciiHex("GIF87a"))
       val gifHex = concat(ver,
-        Bmp.leHex(w, 2), Bmp.leHex(h, 2),
-        Bmp.leHex(packed, 1), Bmp.leHex(bg, 1), Bmp.leHex(lit(0L), 1),
+        leHex(w, 2), leHex(h, 2),
+        leHex(packed, 1), leHex(bg, 1), leHex(lit(0L), 1),
         col("__gct_hex"), lit("3B"))
       staged.select(d,
         when(d % invalidEvery === 0, col("text").cast("binary"))
@@ -1241,7 +1246,7 @@ object Binary {
     * declarative projection in the [[Wav]] idiom — no kernel, no
     * shuffle, codegen end to end.
     */
-  object Webp {
+  object Webp extends Family("webp", "n_pixels") {
     import Wav.leUint
 
     private[multimodal] def isWebp(p: Column): Column =
@@ -1249,10 +1254,10 @@ object Binary {
         substring(p, 1, 4) === lit("RIFF".getBytes("US-ASCII")) &&
         substring(p, 9, 4) === lit("WEBP".getBytes("US-ASCII"))
 
-    /** Parse triage fields. Adds `webp_valid`, `format`
-      * ('VP8'/'VP8L'/'VP8X'), `width`/`height` (VP8X: canvas),
-      * `has_alpha`, `has_animation`, `x_scale`/`y_scale` (VP8's
-      * 2-bit upscale fields, null for other codecs), `n_pixels`,
+    /** Triage fields: `webp_valid`, `format` ('VP8'/'VP8L'/'VP8X'),
+      * `width`/`height` (VP8X: canvas), `has_alpha`,
+      * `has_animation`, `x_scale`/`y_scale` (VP8's 2-bit upscale
+      * fields, null for other codecs), `n_pixels`,
       * `riff_size`/`chunk_bytes` (declared sizes), and
       * `header_consistent` (single-chunk layout: the RIFF size spans
       * exactly WEBP + chunk header + padded chunk, and matches the
@@ -1260,8 +1265,7 @@ object Binary {
       * real multi-chunk files stay valid but inconsistent, same as
       * the other families' strict lanes). Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val p = col(payloadCol)
+    def fields(p: Column): Seq[(String, Column)] = {
       val fourcc = substring(p, 13, 4)
       val riffSize = leUint(p, 5, 4)
       val chunk = leUint(p, 17, 4)
@@ -1281,22 +1285,19 @@ object Binary {
       // VP8L: signature byte then the packed u32le dimension word
       val lBits = leUint(p, 22, 4)
       val vp8lW = pmod(lBits, lit(16384L)) + 1
-      val vp8lH = pmod(expr("__webp_lbits div 16384"), lit(16384L)) + 1
-      val vp8lAlpha = expr("(__webp_lbits div 268435456) % 2") === 1
-      val vp8lVersion = expr("__webp_lbits div 536870912")
+      val vp8lH = pmod(div(lBits, lit(16384L)), lit(16384L)) + 1
+      val vp8lAlpha = div(lBits, lit(268435456L)) % 2 === 1
+      val vp8lVersion = div(lBits, lit(536870912L))
       val vp8lOk = length(p) >= 26 && chunk >= 5 &&
         substring(p, 21, 1) === lit(Array[Byte](0x2F.toByte)) &&
         vp8lVersion === 0
       // VP8X: feature flags byte + 3 reserved + u24le canvas dims
       val xFlags = leUint(p, 21, 1)
-      val xAlpha = expr("(__webp_xflags div 16) % 2") === 1
-      val xAnim = expr("(__webp_xflags div 2) % 2") === 1
+      val xAlpha = div(xFlags, lit(16L)) % 2 === 1
+      val xAnim = div(xFlags, lit(2L)) % 2 === 1
       val xW = leUint(p, 25, 3) + 1
       val xH = leUint(p, 28, 3) + 1
       val vp8xOk = length(p) >= 30 && chunk === 10
-      val staged = media
-        .withColumn("__webp_lbits", lBits)
-        .withColumn("__webp_xflags", xFlags)
       val valid = isWebp(p) && length(p) >= 20 &&
         ((isVp8 && vp8Ok) || (isVp8l && vp8lOk) || (isVp8x && vp8xOk))
       val width = when(isVp8, vp8W).when(isVp8l, vp8lW).otherwise(xW)
@@ -1304,27 +1305,21 @@ object Binary {
       val consistent =
         riffSize === length(p).cast("long") - 8 &&
           riffSize === lit(12L) + chunk + pmod(chunk, lit(2L))
-      staged
-        .withColumn("webp_valid", valid)
-        .withColumn("format",
-          when(valid && isVp8, "VP8").when(valid && isVp8l, "VP8L")
-            .when(valid && isVp8x, "VP8X"))
-        .withColumn("width", when(valid, width))
-        .withColumn("height", when(valid, height))
-        .withColumn("has_alpha",
-          when(valid, when(isVp8l, vp8lAlpha).when(isVp8x, xAlpha)
-            .otherwise(lit(false))))
-        .withColumn("has_animation",
-          when(valid, isVp8x && xAnim))
-        .withColumn("x_scale",
-          when(valid && isVp8, ((wCode - vp8W) / 16384).cast("long")))
-        .withColumn("y_scale",
-          when(valid && isVp8, ((hCode - vp8H) / 16384).cast("long")))
-        .withColumn("n_pixels", when(valid, width * height))
-        .withColumn("riff_size", when(valid, riffSize))
-        .withColumn("chunk_bytes", when(valid, chunk))
-        .withColumn("header_consistent", when(valid, consistent))
-        .drop("__webp_lbits", "__webp_xflags")
+      Seq(
+        "webp_valid" -> valid,
+        "format" -> when(valid && isVp8, "VP8").when(valid && isVp8l, "VP8L")
+          .when(valid && isVp8x, "VP8X"),
+        "width" -> when(valid, width),
+        "height" -> when(valid, height),
+        "has_alpha" -> when(valid, when(isVp8l, vp8lAlpha).when(isVp8x, xAlpha)
+          .otherwise(lit(false))),
+        "has_animation" -> when(valid, isVp8x && xAnim),
+        "x_scale" -> when(valid && isVp8, ((wCode - vp8W) / 16384).cast("long")),
+        "y_scale" -> when(valid && isVp8, ((hCode - vp8H) / 16384).cast("long")),
+        "n_pixels" -> when(valid, width * height),
+        "riff_size" -> when(valid, riffSize),
+        "chunk_bytes" -> when(valid, chunk),
+        "header_consistent" -> when(valid, consistent))
     }
 
     /** Deterministic WebP streams over the docs table, one of the
@@ -1336,10 +1331,7 @@ object Binary {
       * `invalidEvery`-th doc raw text.
       */
     def synthFromDocs(docs: DataFrame, invalidEvery: Int = 10): DataFrame = {
-      import Bmp.leHex
       val d = col("doc_id")
-      def ascii(s: String): Column =
-        lit(s.getBytes("US-ASCII").map("%02X".format(_)).mkString)
       // VP8 lane
       val w8 = lit(3L) + d % 9
       val h8 = lit(2L) + d % 7
@@ -1348,23 +1340,23 @@ object Binary {
       val vp8Payload = concat(
         leHex(pmod(d, lit(128L)) * 2, 1), lit("0000"), lit("9D012A"),
         leHex(w8 + xs * 16384L, 2), leHex(h8 + ys * 16384L, 2))
-      val vp8Hex = concat(ascii("RIFF"), leHex(lit(22L), 4), ascii("WEBP"),
-        ascii("VP8 "), leHex(lit(10L), 4), vp8Payload)
+      val vp8Hex = concat(asciiHex("RIFF"), leHex(lit(22L), 4), asciiHex("WEBP"),
+        asciiHex("VP8 "), leHex(lit(10L), 4), vp8Payload)
       // VP8L lane (5-byte chunk → one pad byte)
       val wl = lit(2L) + d % 300
       val hl = lit(1L) + d % 200
       val alphaL = d % 2
       val lBits = (wl - 1) + (hl - 1) * 16384L + alphaL * 268435456L
-      val vp8lHex = concat(ascii("RIFF"), leHex(lit(18L), 4), ascii("WEBP"),
-        ascii("VP8L"), leHex(lit(5L), 4), lit("2F"), leHex(lBits, 4),
+      val vp8lHex = concat(asciiHex("RIFF"), leHex(lit(18L), 4), asciiHex("WEBP"),
+        asciiHex("VP8L"), leHex(lit(5L), 4), lit("2F"), leHex(lBits, 4),
         lit("00"))
       // VP8X lane
       val cw = lit(7L) + d % 70000
       val ch = lit(5L) + d % 33000
       val flags = when(d % 2 === 1, lit(16L)).otherwise(lit(0L)) +
         when(d % 5 < 2, lit(2L)).otherwise(lit(0L))
-      val vp8xHex = concat(ascii("RIFF"), leHex(lit(22L), 4), ascii("WEBP"),
-        ascii("VP8X"), leHex(lit(10L), 4), leHex(flags, 1), lit("000000"),
+      val vp8xHex = concat(asciiHex("RIFF"), leHex(lit(22L), 4), asciiHex("WEBP"),
+        asciiHex("VP8X"), leHex(lit(10L), 4), leHex(flags, 1), lit("000000"),
         leHex(cw - 1, 3), leHex(ch - 1, 3))
       val webpHex = when(d % 3 === 0, vp8Hex)
         .when(d % 3 === 1, vp8lHex).otherwise(vp8xHex)
@@ -1465,7 +1457,7 @@ object Binary {
     * multi-page IFD chains, strip/tile layouts, inline and
     * out-of-line values. One codegen kernel pass, pure projection.
     */
-  object Tiff {
+  object Tiff extends Family("tiff", "n_pixels") {
     import org.apache.spark.sql.GraftColumnBridge.{column => gcol, expression => gexpr}
 
     private[multimodal] def isTiff(p: Column): Column =
@@ -1473,36 +1465,21 @@ object Binary {
         (substring(p, 1, 4) === lit(Array[Byte]('I', 'I', 42, 0)) ||
           substring(p, 1, 4) === lit(Array[Byte]('M', 'M', 0, 42)))
 
-    /** Parse triage fields: validity, byte order, page count
-      * (chained IFDs), IFD0 entry count, dimensions, bits/sample,
+    /** Triage fields: validity, byte order, page count (chained
+      * IFDs), IFD0 entry count, dimensions, bits/sample,
       * samples/pixel, compression tag, photometric, data layout
       * (strip | tile | none) with unit count and geometry, `n_pixels`,
       * and a bounds-consistency verdict over every referenced offset.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.TiffMeta(gexpr(col(payloadCol))))
-      val valid = coalesce(col("__t.tiff_valid"), lit(false))
-      media
-        .withColumn("__t", m)
-        .withColumn("tiff_valid", valid)
-        .withColumn("byte_order", col("__t.byte_order"))
-        .withColumn("n_ifds", col("__t.n_ifds"))
-        .withColumn("n_ifd0_entries", col("__t.n_ifd0_entries"))
-        .withColumn("width", col("__t.width"))
-        .withColumn("height", col("__t.height"))
-        .withColumn("bits_per_sample", col("__t.bits_per_sample"))
-        .withColumn("samples_per_pixel", col("__t.samples_per_pixel"))
-        .withColumn("compression", col("__t.compression"))
-        .withColumn("photometric", col("__t.photometric"))
-        .withColumn("layout", col("__t.layout"))
-        .withColumn("n_units", col("__t.n_units"))
-        .withColumn("rows_per_strip", col("__t.rows_per_strip"))
-        .withColumn("tile_w", col("__t.tile_w"))
-        .withColumn("tile_h", col("__t.tile_h"))
-        .withColumn("n_pixels",
-          when(col("tiff_valid"), col("__t.width") * col("__t.height")))
-        .withColumn("header_consistent", col("__t.header_consistent"))
-        .drop("__t")
+    def fields(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.TiffMeta(gexpr(p)))
+      val valid = coalesce(m.getField("tiff_valid"), lit(false))
+      ("tiff_valid" -> valid) +:
+        fieldsOf(m, "byte_order", "n_ifds", "n_ifd0_entries", "width", "height",
+          "bits_per_sample", "samples_per_pixel", "compression", "photometric",
+          "layout", "n_units", "rows_per_strip", "tile_w", "tile_h") :+
+        ("n_pixels" -> when(valid, m.getField("width") * m.getField("height"))) :+
+        ("header_consistent" -> m.getField("header_consistent"))
     }
 
     /** Deterministic TIFF payloads over the docs table (see
@@ -1577,7 +1554,7 @@ object Binary {
     * duration, Xing/Info VBR tag, ID3v1 trailer. One codegen kernel
     * pass, pure projection.
     */
-  object Mp3 {
+  object Mp3 extends Family("mp3", "duration_ms") {
     import org.apache.spark.sql.GraftColumnBridge.{column => gcol, expression => gexpr}
 
     /** Column-level detection mirror of `Mp3MetaKernel.isMp3`: ID3v2
@@ -1596,30 +1573,18 @@ object Binary {
       id3 || sync
     }
 
-    /** Parse triage fields: validity, ID3v2 presence/size, MPEG
-      * version and layer, first-frame bitrate/sample-rate/channel
-      * mode, frame count, exact duration_ms, ID3v1 trailer, Xing/Info
-      * VBR flag, and the wall-to-wall `consistent` verdict. Pure
-      * projection.
+    /** Triage fields: validity, ID3v2 presence/size, MPEG version and
+      * layer, first-frame bitrate/sample-rate/channel mode, frame
+      * count, exact duration_ms, ID3v1 trailer, Xing/Info VBR flag,
+      * and the wall-to-wall `consistent` verdict. Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.Mp3Meta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__m", m)
-        .withColumn("mp3_valid", coalesce(col("__m.mp3_valid"), lit(false)))
-        .withColumn("has_id3v2", col("__m.has_id3v2"))
-        .withColumn("id3v2_bytes", col("__m.id3v2_bytes"))
-        .withColumn("mpeg_version", col("__m.mpeg_version"))
-        .withColumn("layer", col("__m.layer"))
-        .withColumn("bitrate_kbps", col("__m.bitrate_kbps"))
-        .withColumn("sample_rate", col("__m.sample_rate"))
-        .withColumn("channel_mode", col("__m.channel_mode"))
-        .withColumn("n_frames", col("__m.n_frames"))
-        .withColumn("duration_ms", col("__m.duration_ms"))
-        .withColumn("has_id3v1", col("__m.has_id3v1"))
-        .withColumn("is_vbr", col("__m.is_vbr"))
-        .withColumn("header_consistent", col("__m.consistent"))
-        .drop("__m")
+    def fields(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.Mp3Meta(gexpr(p)))
+      ("mp3_valid" -> coalesce(m.getField("mp3_valid"), lit(false))) +:
+        fieldsOf(m, "has_id3v2", "id3v2_bytes", "mpeg_version", "layer",
+          "bitrate_kbps", "sample_rate", "channel_mode", "n_frames", "duration_ms",
+          "has_id3v1", "is_vbr") :+
+        ("header_consistent" -> m.getField("consistent"))
     }
 
     /** Deterministic MP3 payloads over the docs table (see
@@ -1644,7 +1609,7 @@ object Binary {
     * ([[graft.expressions.FlacMetaKernel]]). One codegen kernel pass,
     * pure projection.
     */
-  object Flac {
+  object Flac extends Family("flac", "duration_ms") {
     import org.apache.spark.sql.GraftColumnBridge.{column => gcol, expression => gexpr}
 
     /** Column-level detection mirror of `FlacMetaKernel.isFlac`: the
@@ -1656,28 +1621,18 @@ object Binary {
         substring(p, 1, 4) === lit("fLaC".getBytes("US-ASCII")) &&
         pmod(Wav.leUint(p, 5, 1), lit(128)) === 0
 
-    /** Parse triage fields: validity, STREAMINFO's sample rate /
-      * channels / bits-per-sample / total samples (exact integer
-      * duration_ms), block count, VORBIS_COMMENT presence, block-size
-      * bounds, and the chain-in-bounds `consistent` verdict. Pure
-      * projection.
+    /** Triage fields: validity, STREAMINFO's sample rate / channels /
+      * bits-per-sample / total samples (exact integer duration_ms),
+      * block count, VORBIS_COMMENT presence, block-size bounds, and
+      * the chain-in-bounds `consistent` verdict. Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.FlacMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__f", m)
-        .withColumn("flac_valid", coalesce(col("__f.flac_valid"), lit(false)))
-        .withColumn("sample_rate", col("__f.sample_rate"))
-        .withColumn("channels", col("__f.channels"))
-        .withColumn("bits_per_sample", col("__f.bits_per_sample"))
-        .withColumn("total_samples", col("__f.total_samples"))
-        .withColumn("duration_ms", col("__f.duration_ms"))
-        .withColumn("n_blocks", col("__f.n_blocks"))
-        .withColumn("has_vorbis_comment", col("__f.has_vorbis_comment"))
-        .withColumn("min_block_size", col("__f.min_block_size"))
-        .withColumn("max_block_size", col("__f.max_block_size"))
-        .withColumn("header_consistent", col("__f.consistent"))
-        .drop("__f")
+    def fields(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.FlacMeta(gexpr(p)))
+      ("flac_valid" -> coalesce(m.getField("flac_valid"), lit(false))) +:
+        fieldsOf(m, "sample_rate", "channels", "bits_per_sample", "total_samples",
+          "duration_ms", "n_blocks", "has_vorbis_comment", "min_block_size",
+          "max_block_size") :+
+        ("header_consistent" -> m.getField("consistent"))
     }
 
     /** Deterministic FLAC payloads over the docs table (see
@@ -1760,7 +1715,7 @@ object Binary {
     * codec-ID-header parse ([[graft.expressions.OggMetaKernel]]).
     * One codegen kernel pass, pure projection.
     */
-  object Ogg {
+  object Ogg extends Family("ogg", "duration_ms") {
     import org.apache.spark.sql.GraftColumnBridge.{column => gcol, expression => gexpr}
 
     /** Column-level detection mirror of `OggMetaKernel.isOgg`: the
@@ -1771,30 +1726,20 @@ object Binary {
       length(p) >= 5 &&
         substring(p, 1, 5) === lit(Array[Byte]('O', 'g', 'g', 'S', 0))
 
-    /** Parse triage fields: validity, the first packet's codec
-      * (vorbis / opus / flac / theora / unknown), rate / channels /
-      * Opus pre-skip, page and completed-packet counts from the
-      * lacing tables, the final granule position and its exact
-      * integer duration, the page-CRC integrity verdict, and the
+    /** Triage fields: validity, the first packet's codec (vorbis /
+      * opus / flac / theora / unknown), rate / channels / Opus
+      * pre-skip, page and completed-packet counts from the lacing
+      * tables, the final granule position and its exact integer
+      * duration, the page-CRC integrity verdict, and the
       * single-stream structural `consistent` verdict. Pure
       * projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.OggMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__o", m)
-        .withColumn("ogg_valid", coalesce(col("__o.ogg_valid"), lit(false)))
-        .withColumn("codec", col("__o.codec"))
-        .withColumn("sample_rate", col("__o.sample_rate"))
-        .withColumn("channels", col("__o.channels"))
-        .withColumn("pre_skip", col("__o.pre_skip"))
-        .withColumn("n_pages", col("__o.n_pages"))
-        .withColumn("n_packets", col("__o.n_packets"))
-        .withColumn("last_granule", col("__o.last_granule"))
-        .withColumn("duration_ms", col("__o.duration_ms"))
-        .withColumn("crc_ok", col("__o.crc_ok"))
-        .withColumn("header_consistent", col("__o.consistent"))
-        .drop("__o")
+    def fields(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.OggMeta(gexpr(p)))
+      ("ogg_valid" -> coalesce(m.getField("ogg_valid"), lit(false))) +:
+        fieldsOf(m, "codec", "sample_rate", "channels", "pre_skip", "n_pages",
+          "n_packets", "last_granule", "duration_ms", "crc_ok") :+
+        ("header_consistent" -> m.getField("consistent"))
     }
 
     /** Deterministic OGG payloads over the docs table (see
@@ -1881,7 +1826,7 @@ object Binary {
     * ([[graft.expressions.MkvMetaKernel]]). One codegen kernel pass,
     * pure projection.
     */
-  object Mkv {
+  object Mkv extends Family("mkv", "duration_ms") {
     import org.apache.spark.sql.GraftColumnBridge.{column => gcol, expression => gexpr}
 
     /** Column-level detection mirror of `MkvMetaKernel.isMkv`: the
@@ -1892,31 +1837,19 @@ object Binary {
       length(p) >= 4 && substring(p, 1, 4) ===
         lit(Array[Byte](0x1A, 0x45, 0xDF.toByte, 0xA3.toByte))
 
-    /** Parse triage fields: validity, doctype (webm vs matroska),
-      * doctype version, timecode scale, exact rounded duration_ms,
-      * track count, first video track's codec/dims, first audio
-      * track's codec/channels/rate, cluster count, and the
+    /** Triage fields: validity, doctype (webm vs matroska), doctype
+      * version, timecode scale, exact rounded duration_ms, track
+      * count, first video track's codec/dims, first audio track's
+      * codec/channels/rate, cluster count, and the
       * every-element-in-bounds `consistent` verdict. Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.MkvMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__m", m)
-        .withColumn("mkv_valid", coalesce(col("__m.mkv_valid"), lit(false)))
-        .withColumn("doctype", col("__m.doctype"))
-        .withColumn("doctype_version", col("__m.doctype_version"))
-        .withColumn("timecode_scale", col("__m.timecode_scale"))
-        .withColumn("duration_ms", col("__m.duration_ms"))
-        .withColumn("n_tracks", col("__m.n_tracks"))
-        .withColumn("video_codec", col("__m.video_codec"))
-        .withColumn("pixel_width", col("__m.pixel_width"))
-        .withColumn("pixel_height", col("__m.pixel_height"))
-        .withColumn("audio_codec", col("__m.audio_codec"))
-        .withColumn("audio_channels", col("__m.audio_channels"))
-        .withColumn("audio_sample_rate", col("__m.audio_sample_rate"))
-        .withColumn("n_clusters", col("__m.n_clusters"))
-        .withColumn("header_consistent", col("__m.consistent"))
-        .drop("__m")
+    def fields(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.MkvMeta(gexpr(p)))
+      ("mkv_valid" -> coalesce(m.getField("mkv_valid"), lit(false))) +:
+        fieldsOf(m, "doctype", "doctype_version", "timecode_scale", "duration_ms",
+          "n_tracks", "video_codec", "pixel_width", "pixel_height", "audio_codec",
+          "audio_channels", "audio_sample_rate", "n_clusters") :+
+        ("header_consistent" -> m.getField("consistent"))
     }
 
     /** Deterministic Matroska/WebM payloads over the docs table (see
@@ -1944,7 +1877,7 @@ object Binary {
     * record of a primitives-only schema. One codegen kernel pass
     * each, pure projections.
     */
-  object Avro {
+  object Avro extends Family("avro", "n_records") {
     import org.apache.spark.sql.GraftColumnBridge.{column => gcol, expression => gexpr}
 
     /** Column-level detection mirror of `AvroMetaKernel.isAvro`: the
@@ -1955,28 +1888,17 @@ object Binary {
       length(p) >= 4 &&
         substring(p, 1, 4) === lit(Array[Byte]('O', 'b', 'j', 1))
 
-    /** Parse triage fields: validity, codec, the schema JSON's
-      * top-level type/name/byte-length, metadata entry count, block
-      * and record counts, payload byte total, the sync-marker
-      * integrity verdict, and the wall-to-wall `consistent` verdict.
-      * Pure projection.
+    /** Triage fields: validity, codec, the schema JSON's top-level
+      * type/name/byte-length, metadata entry count, block and record
+      * counts, payload byte total, the sync-marker integrity verdict,
+      * and the wall-to-wall `consistent` verdict. Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.AvroMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__a", m)
-        .withColumn("avro_valid", coalesce(col("__a.avro_valid"), lit(false)))
-        .withColumn("codec", col("__a.codec"))
-        .withColumn("schema_type", col("__a.schema_type"))
-        .withColumn("schema_name", col("__a.schema_name"))
-        .withColumn("schema_bytes", col("__a.schema_bytes"))
-        .withColumn("n_meta_entries", col("__a.n_meta_entries"))
-        .withColumn("n_blocks", col("__a.n_blocks"))
-        .withColumn("n_records", col("__a.n_records"))
-        .withColumn("data_bytes", col("__a.data_bytes"))
-        .withColumn("sync_ok", col("__a.sync_ok"))
-        .withColumn("header_consistent", col("__a.consistent"))
-        .drop("__a")
+    def fields(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.AvroMeta(gexpr(p)))
+      ("avro_valid" -> coalesce(m.getField("avro_valid"), lit(false))) +:
+        fieldsOf(m, "codec", "schema_type", "schema_name", "schema_bytes",
+          "n_meta_entries", "n_blocks", "n_records", "data_bytes", "sync_ok") :+
+        ("header_consistent" -> m.getField("consistent"))
     }
 
     /** Flat-record decode tier: every record of a primitives-only
@@ -2024,7 +1946,7 @@ object Binary {
     * ([[graft.expressions.ParquetMetaKernel]]). One codegen kernel
     * pass, pure projection.
     */
-  object Parquet {
+  object Parquet extends Family("parquet", "num_rows") {
     import org.apache.spark.sql.GraftColumnBridge.{column => gcol, expression => gexpr}
 
     /** Column-level detection mirror of `ParquetMetaKernel.isParquet`:
@@ -2037,27 +1959,17 @@ object Binary {
         substring(p, 1, 4) === lit("PAR1".getBytes("US-ASCII")) &&
         substring(p, -4, 4) === lit("PAR1".getBytes("US-ASCII"))
 
-    /** Parse triage fields: validity, format version, declared row
-      * count, row-group count and Σ total_byte_size, schema element
-      * and LEAF column counts, the writer id, the Σ-row-group-rows
-      * integrity verdict, and the footer byte length. Pure
-      * projection.
+    /** Triage fields: validity, format version, declared row count,
+      * row-group count and Σ total_byte_size, schema element and LEAF
+      * column counts, the writer id, the Σ-row-group-rows integrity
+      * verdict, and the footer byte length. Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.ParquetMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__p", m)
-        .withColumn("parquet_valid", coalesce(col("__p.parquet_valid"), lit(false)))
-        .withColumn("version", col("__p.version"))
-        .withColumn("num_rows", col("__p.num_rows"))
-        .withColumn("n_row_groups", col("__p.n_row_groups"))
-        .withColumn("n_columns", col("__p.n_columns"))
-        .withColumn("n_schema_elements", col("__p.n_schema_elements"))
-        .withColumn("total_byte_size", col("__p.total_byte_size"))
-        .withColumn("created_by", col("__p.created_by"))
-        .withColumn("rows_match", col("__p.rows_match"))
-        .withColumn("footer_bytes", col("__p.footer_bytes"))
-        .drop("__p")
+    def fields(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.ParquetMeta(gexpr(p)))
+      ("parquet_valid" -> coalesce(m.getField("parquet_valid"), lit(false))) +:
+        fieldsOf(m, "version", "num_rows", "n_row_groups", "n_columns",
+          "n_schema_elements", "total_byte_size", "created_by", "rows_match",
+          "footer_bytes")
     }
 
     /** Deterministic Parquet payloads over the docs table (see
@@ -2126,7 +2038,7 @@ object Binary {
     * ([[graft.expressions.GzipMetaKernel]]). One codegen kernel
     * pass, pure projection.
     */
-  object Gz {
+  object Gz extends Family("gzip", "uncompressed_bytes") {
     import org.apache.spark.sql.GraftColumnBridge.{column => gcol, expression => gexpr}
 
     /** Column-level detection mirror of `GzipMetaKernel.isGzip`:
@@ -2137,25 +2049,17 @@ object Binary {
       length(p) >= 18 && substring(p, 1, 3) ===
         lit(Array[Byte](0x1F, 0x8B.toByte, 8))
 
-    /** Parse triage fields: validity, member count, uncompressed
-      * byte total (every body REALLY inflated), FNAME-carrying
-      * member count, the first member's MTIME, per-member CRC32 /
-      * ISIZE verdicts, and wall-to-wall `consistent`. Pure
-      * projection.
+    /** Triage fields: validity, member count, uncompressed byte total
+      * (every body REALLY inflated), FNAME-carrying member count, the
+      * first member's MTIME, per-member CRC32 / ISIZE verdicts, and
+      * wall-to-wall `consistent`. Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.GzipMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__g", m)
-        .withColumn("gzip_valid", coalesce(col("__g.gzip_valid"), lit(false)))
-        .withColumn("n_members", col("__g.n_members"))
-        .withColumn("uncompressed_bytes", col("__g.uncompressed_bytes"))
-        .withColumn("n_named", col("__g.n_named"))
-        .withColumn("first_mtime", col("__g.first_mtime"))
-        .withColumn("crc_ok", col("__g.crc_ok"))
-        .withColumn("isize_ok", col("__g.isize_ok"))
-        .withColumn("header_consistent", col("__g.consistent"))
-        .drop("__g")
+    def fields(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.GzipMeta(gexpr(p)))
+      ("gzip_valid" -> coalesce(m.getField("gzip_valid"), lit(false))) +:
+        fieldsOf(m, "n_members", "uncompressed_bytes", "n_named", "first_mtime",
+          "crc_ok", "isize_ok") :+
+        ("header_consistent" -> m.getField("consistent"))
     }
 
     /** Deterministic multi-member gzip payloads over the docs table
@@ -2175,41 +2079,29 @@ object Binary {
     }
   }
 
-  /** ICO container triage + pixel tier — the TWENTIETH family: the
-    * favicon ([[graft.expressions.IcoMetaKernel]]): ICONDIR walk
-    * with the 0-means-256 rule, PNG entries through the real zlib
-    * inflate + scanline unfilter, headerless doubled-height DIB
-    * entries decoded directly. One codegen kernel pass, pure
-    * projection.
-    */
   /** AVIF/HEIC triage — the TWENTY-FIRST family (r15): HEIF images
     * in ISO BMFF, split off the generic `ftyp` lane by brand
     * ([[graft.expressions.AvifMetaKernel]] — the FullBox `meta`
     * walk). One codegen kernel pass, pure projection.
     */
-  object Heif {
+  object Heif extends Family("heif", "n_pixels") {
     import org.apache.spark.sql.GraftColumnBridge.{column => gcol, expression => gexpr}
 
-    /** Parse triage fields: validity (brand + a walked meta tree
-      * with real dimensions), brand, dims, item/alpha/exif fields,
-      * pixel count, mdat size. Pure projection.
+    /** Triage fields: validity (brand + a walked meta tree with real
+      * dimensions), brand, dims, item/alpha/exif fields, pixel count,
+      * mdat size. Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.AvifMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__h", m)
-        .withColumn("heif_valid",
-          col("__h").isNotNull && col("__h.width").isNotNull)
-        .withColumn("brand", col("__h.brand"))
-        .withColumn("heif_width", col("__h.width"))
-        .withColumn("heif_height", col("__h.height"))
-        .withColumn("n_items", col("__h.n_items"))
-        .withColumn("primary_type", col("__h.primary_type"))
-        .withColumn("has_alpha", col("__h.has_alpha"))
-        .withColumn("has_exif", col("__h.has_exif"))
-        .withColumn("n_pixels", col("__h.width") * col("__h.height"))
-        .withColumn("mdat_bytes", col("__h.mdat_bytes"))
-        .drop("__h")
+    def fields(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.AvifMeta(gexpr(p)))
+      Seq(
+        "heif_valid" -> (m.isNotNull && m.getField("width").isNotNull),
+        "brand" -> m.getField("brand"),
+        "heif_width" -> m.getField("width"),
+        "heif_height" -> m.getField("height")) ++
+        fieldsOf(m, "n_items", "primary_type", "has_alpha", "has_exif") ++
+        Seq(
+          "n_pixels" -> m.getField("width") * m.getField("height"),
+          "mdat_bytes" -> m.getField("mdat_bytes"))
     }
 
     /** Deterministic HEIF payloads over the docs table (see
@@ -2228,7 +2120,14 @@ object Binary {
     }
   }
 
-  object Ico {
+  /** ICO container triage + pixel tier — the TWENTIETH family: the
+    * favicon ([[graft.expressions.IcoMetaKernel]]): ICONDIR walk
+    * with the 0-means-256 rule, PNG entries through the real zlib
+    * inflate + scanline unfilter, headerless doubled-height DIB
+    * entries decoded directly. One codegen kernel pass, pure
+    * projection.
+    */
+  object Ico extends Family("ico", "n_icons") {
     import org.apache.spark.sql.GraftColumnBridge.{column => gcol, expression => gexpr}
 
     /** Column-level detection mirror of `IcoMetaKernel.isIco`:
@@ -2239,28 +2138,17 @@ object Binary {
       length(p) >= 22 &&
         substring(p, 1, 4) === lit(Array[Byte](0, 0, 1, 0))
 
-    /** Parse triage + pixel fields: validity, icon/PNG/DIB entry
-      * counts, max declared dims (0→256), offset-bounds verdict,
-      * decoded-entry count + RGB pixel sum, the declared-vs-decoded
-      * `dims_match` verdict, and the entry byte total. Pure
-      * projection.
+    /** Triage + pixel fields: validity, icon/PNG/DIB entry counts, max
+      * declared dims (0→256), offset-bounds verdict, decoded-entry
+      * count + RGB pixel sum, the declared-vs-decoded `dims_match`
+      * verdict, and the entry byte total. Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.IcoMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__i", m)
-        .withColumn("ico_valid", coalesce(col("__i.ico_valid"), lit(false)))
-        .withColumn("n_icons", col("__i.n_icons"))
-        .withColumn("n_png_entries", col("__i.n_png_entries"))
-        .withColumn("n_dib_entries", col("__i.n_dib_entries"))
-        .withColumn("max_width", col("__i.max_width"))
-        .withColumn("max_height", col("__i.max_height"))
-        .withColumn("entries_ok", col("__i.entries_ok"))
-        .withColumn("n_decoded", col("__i.n_decoded"))
-        .withColumn("pixel_sum", col("__i.pixel_sum"))
-        .withColumn("dims_match", col("__i.dims_match"))
-        .withColumn("total_image_bytes", col("__i.total_image_bytes"))
-        .drop("__i")
+    def fields(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.IcoMeta(gexpr(p)))
+      ("ico_valid" -> coalesce(m.getField("ico_valid"), lit(false))) +:
+        fieldsOf(m, "n_icons", "n_png_entries", "n_dib_entries", "max_width",
+          "max_height", "entries_ok", "n_decoded", "pixel_sum", "dims_match",
+          "total_image_bytes")
     }
 
     /** Deterministic ICO payloads over the docs table (see
@@ -2286,7 +2174,7 @@ object Binary {
     * Spark's own XXH64, compressed frames inflated through zstd-jni.
     * One codegen kernel pass, pure projection.
     */
-  object Zstd {
+  object Zstd extends Family("zstd", "uncompressed_bytes") {
     import org.apache.spark.sql.GraftColumnBridge.{column => gcol, expression => gexpr}
 
     /** Column-level detection ROUTER (the kernel is the validator):
@@ -2302,36 +2190,21 @@ object Binary {
         substring(p, 2, 3) ===
           lit(Array[Byte](0x2A, 0x4D, 0x18)))
 
-    /** Parse triage fields: validity, frame/skippable/block counts,
+    /** Triage fields: validity, frame/skippable/block counts,
       * uncompressed byte total (raw/RLE reconstructed in the walk,
       * compressed frames really inflated), declared-content-size
       * accounting with the `size_match` verdict, first-frame window
       * log / single-segment / dictionary ID, XXH64 `checksum_ok`,
       * `decode_ok`, and wall-to-wall `consistent`. Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.ZstdMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__z", m)
-        .withColumn("zstd_valid", coalesce(col("__z.zstd_valid"), lit(false)))
-        .withColumn("n_frames", col("__z.n_frames"))
-        .withColumn("n_skippable", col("__z.n_skippable"))
-        .withColumn("skippable_bytes", col("__z.skippable_bytes"))
-        .withColumn("n_blocks", col("__z.n_blocks"))
-        .withColumn("n_rle_blocks", col("__z.n_rle_blocks"))
-        .withColumn("n_compressed_blocks", col("__z.n_compressed_blocks"))
-        .withColumn("uncompressed_bytes", col("__z.uncompressed_bytes"))
-        .withColumn("n_declared", col("__z.n_declared"))
-        .withColumn("declared_bytes", col("__z.declared_bytes"))
-        .withColumn("size_match", col("__z.size_match"))
-        .withColumn("single_segment", col("__z.single_segment"))
-        .withColumn("window_log", col("__z.window_log"))
-        .withColumn("dict_id", col("__z.dict_id"))
-        .withColumn("n_checksummed", col("__z.n_checksummed"))
-        .withColumn("checksum_ok", col("__z.checksum_ok"))
-        .withColumn("decode_ok", col("__z.decode_ok"))
-        .withColumn("header_consistent", col("__z.consistent"))
-        .drop("__z")
+    def fields(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.ZstdMeta(gexpr(p)))
+      ("zstd_valid" -> coalesce(m.getField("zstd_valid"), lit(false))) +:
+        fieldsOf(m, "n_frames", "n_skippable", "skippable_bytes", "n_blocks",
+          "n_rle_blocks", "n_compressed_blocks", "uncompressed_bytes", "n_declared",
+          "declared_bytes", "size_match", "single_segment", "window_log", "dict_id",
+          "n_checksummed", "checksum_ok", "decode_ok") :+
+        ("header_consistent" -> m.getField("consistent"))
     }
 
     /** Deterministic multi-frame zstd payloads over the docs table
@@ -2356,7 +2229,7 @@ object Binary {
     * chunk decompression ([[graft.expressions.OrcMetaKernel]]). One
     * codegen kernel pass, pure projection.
     */
-  object Orc {
+  object Orc extends Family("orc", "num_rows") {
     import org.apache.spark.sql.GraftColumnBridge.{column => gcol, expression => gexpr}
 
     /** Column-level detection mirror of `OrcMetaKernel.isOrc`: the
@@ -2369,31 +2242,22 @@ object Binary {
       length(p) >= 16 &&
         substring(p, 1, 3) === lit("ORC".getBytes("US-ASCII"))
 
-    /** Parse triage fields: validity, compression kind, whether the
-      * footer decoded (NONE/ZLIB do; SNAPPY/LZO/LZ4/ZSTD report
+    /** Triage fields: validity, compression kind, whether the footer
+      * decoded (NONE/ZLIB do; SNAPPY/LZO/LZ4/ZSTD report
       * PostScript-grain fields only), declared rows, stripe count +
       * Σ per-stripe rows with the `stripe_rows_match` integrity
       * verdict, type/column counts, content length, writer version,
       * footer/metadata byte lengths. Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val m = gcol(graft.expressions.OrcMeta(gexpr(col(payloadCol))))
-      media
-        .withColumn("__o", m)
-        .withColumn("orc_valid", coalesce(col("__o.orc_valid"), lit(false)))
-        .withColumn("compression", col("__o.compression"))
-        .withColumn("footer_decoded", coalesce(col("__o.footer_decoded"), lit(false)))
-        .withColumn("num_rows", col("__o.num_rows"))
-        .withColumn("n_stripes", col("__o.n_stripes"))
-        .withColumn("stripe_rows", col("__o.stripe_rows"))
-        .withColumn("n_types", col("__o.n_types"))
-        .withColumn("n_cols", col("__o.n_cols"))
-        .withColumn("content_length", col("__o.content_length"))
-        .withColumn("writer_version", col("__o.writer_version"))
-        .withColumn("footer_bytes", col("__o.footer_bytes"))
-        .withColumn("metadata_bytes", col("__o.metadata_bytes"))
-        .withColumn("stripe_rows_match", col("__o.stripe_rows_match"))
-        .drop("__o")
+    def fields(p: Column): Seq[(String, Column)] = {
+      val m = gcol(graft.expressions.OrcMeta(gexpr(p)))
+      Seq(
+        "orc_valid" -> coalesce(m.getField("orc_valid"), lit(false)),
+        "compression" -> m.getField("compression"),
+        "footer_decoded" -> coalesce(m.getField("footer_decoded"), lit(false))) ++
+        fieldsOf(m, "num_rows", "n_stripes", "stripe_rows", "n_types", "n_cols",
+          "content_length", "writer_version", "footer_bytes", "metadata_bytes",
+          "stripe_rows_match")
     }
 
     /** Deterministic ORC payloads over the docs table (see
@@ -2421,19 +2285,18 @@ object Binary {
     * RELATIVE to the located box, declarative `substr`+`conv` BE
     * reads, version-gated for the v0/v1 `mvhd` layouts).
     */
-  object Mp4 {
+  object Mp4 extends Family("mp4", "duration_ms") {
     private def boxOff(p: Column, path: String): Column =
       org.apache.spark.sql.GraftColumnBridge.column(
         graft.expressions.Mp4BoxOffset(
           org.apache.spark.sql.GraftColumnBridge.expression(p), path))
 
-    /** Parse triage fields: `mp4_valid` (clean top-level partition +
-      * ftyp + moov/mvhd), `major_brand`, `n_top_boxes`, `has_mdat`,
+    /** Triage fields: `mp4_valid` (clean top-level partition + ftyp +
+      * moov/mvhd), `major_brand`, `n_top_boxes`, `has_mdat`,
       * `mvhd_version`, `timescale`, `duration` (movie units),
       * `duration_ms` (exact integer arithmetic). Pure projection.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val p = col(payloadCol)
+    def fields(p: Column): Seq[(String, Column)] = {
       val nTop = org.apache.spark.sql.GraftColumnBridge.column(
         graft.expressions.Mp4TopBoxes(
           org.apache.spark.sql.GraftColumnBridge.expression(p)))
@@ -2445,18 +2308,15 @@ object Binary {
         .otherwise(Jpeg.beUintAt(p, mvhd + 28, 4))
       val duration = when(ver === 0, Jpeg.beUintAt(p, mvhd + 24, 4))
         .otherwise(Jpeg.beUintAt(p, mvhd + 32, 8))
-      media
-        .withColumn("mp4_valid", valid)
-        .withColumn("major_brand",
-          when(valid, p.substr((ftyp + 8).cast("int"), lit(4)).cast("string")))
-        .withColumn("n_top_boxes", when(valid, nTop))
-        .withColumn("has_mdat", when(valid, boxOff(p, "mdat").isNotNull))
-        .withColumn("mvhd_version", when(valid, ver))
-        .withColumn("timescale", when(valid, timescale))
-        .withColumn("duration", when(valid, duration))
-        .withColumn("duration_ms",
-          when(valid && timescale > 0,
-            expr("(duration * 1000) div timescale")))
+      Seq(
+        "mp4_valid" -> valid,
+        "major_brand" -> when(valid, p.substr((ftyp + 8).cast("int"), lit(4)).cast("string")),
+        "n_top_boxes" -> when(valid, nTop),
+        "has_mdat" -> when(valid, boxOff(p, "mdat").isNotNull),
+        "mvhd_version" -> when(valid, ver),
+        "timescale" -> when(valid, timescale),
+        "duration" -> when(valid, duration),
+        "duration_ms" -> when(valid && timescale > 0, div(duration * 1000, timescale)))
     }
 
     /** Deterministic BMFF skeletons: ftyp (brand rotates), an
@@ -2468,9 +2328,6 @@ object Binary {
       */
     def synthFromDocs(docs: DataFrame, invalidEvery: Int = 10): DataFrame = {
       val d = col("doc_id")
-      def beHex(v: Column, n: Int): Column = lpad(hex(v), n * 2, "0")
-      def asciiHex(s: String): Column =
-        lit(s.getBytes("US-ASCII").map("%02X".format(_)).mkString)
       val brand = when(d % 2 === 0, asciiHex("isom")).otherwise(asciiHex("mp42"))
       val ftypHex = concat(beHex(lit(16L), 4), asciiHex("ftyp"), brand,
         lit("00000200"))
@@ -2521,15 +2378,14 @@ object Binary {
     * codec service's job, exactly like the image families' pixel rows
     * vs their meta rows.
     */
-  object Pdf {
+  object Pdf extends Family("pdf", "n_pages") {
     def isPdf(p: Column): Column =
       length(p) >= 10 && substring(p, 1, 5) === lit("%PDF-".getBytes("US-ASCII"))
 
-    /** Parse triage fields from `payloadCol`. Adds `pdf_valid`
-      * (header magic + an `%%EOF` marker), `version` ("1.7" …),
-      * `n_objects` (numbered `obj` bodies), `n_streams`
-      * (`endstream` terminators), `n_pages` (`/Type /Page ` leaf
-      * dictionaries), `encrypted` (`/Encrypt` in scope),
+    /** Triage fields: `pdf_valid` (header magic + an `%%EOF` marker),
+      * `version` ("1.7" …), `n_objects` (numbered `obj` bodies),
+      * `n_streams` (`endstream` terminators), `n_pages` (`/Type /Page `
+      * leaf dictionaries), `encrypted` (`/Encrypt` in scope),
       * `xref_layout` (what the `startxref` back-pointer actually
       * lands on: `table` — the classic `xref` keyword; `stream` — an
       * object whose dictionary declares `/Type /XRef`, the PDF 1.5+
@@ -2542,9 +2398,9 @@ object Binary {
       * `header_consistent` (back-pointer ok and the file ends at
       * `%%EOF`). Pure projection — zero shuffles.
       */
-    def parse(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
-      val s = col(payloadCol).cast("string")
-      val valid = isPdf(col(payloadCol)) && s.contains("%%EOF")
+    def fields(p: Column): Seq[(String, Column)] = {
+      val s = p.cast("string")
+      val valid = isPdf(p) && s.contains("%%EOF")
       val sx = regexp_extract(s, "startxref\\s+([0-9]+)\\s*%%EOF", 1)
       // bounded probe slice at the declared offset: enough bytes to
       // see `N G obj << … /Type /XRef` without re-scanning the file
@@ -2553,24 +2409,22 @@ object Binary {
       val streamAt = sx =!= "" &&
         atOff.rlike("(?s)^[0-9]+ [0-9]+ obj.{0,200}?/Type\\s*/XRef")
       val sxOk = tableAt || streamAt
-      media
-        .withColumn("pdf_valid", valid)
-        .withColumn("version", when(valid, substring(s, 6, 3)))
-        .withColumn("n_objects", when(valid,
-          size(regexp_extract_all(s, lit("[0-9]+ [0-9]+ obj"), lit(0))).cast("long")))
-        .withColumn("n_streams", when(valid,
-          size(regexp_extract_all(s, lit("endstream"), lit(0))).cast("long")))
-        .withColumn("n_pages", when(valid,
-          size(regexp_extract_all(s, lit("/Type /Page "), lit(0))).cast("long")))
-        .withColumn("encrypted", when(valid, s.contains("/Encrypt")))
-        .withColumn("xref_layout", when(valid,
-          when(tableAt, "table").when(streamAt, "stream").otherwise("none")))
-        .withColumn("declared_size", when(valid,
-          nullif(regexp_extract(s, "/Size ([0-9]+)", 1), lit(""))
-            .cast("long")))
-        .withColumn("startxref_ok", when(valid, sxOk))
-        .withColumn("header_consistent",
-          when(valid, sxOk && s.endsWith("%%EOF")))
+      Seq(
+        "pdf_valid" -> valid,
+        "version" -> when(valid, substring(s, 6, 3)),
+        "n_objects" -> when(valid,
+          size(regexp_extract_all(s, lit("[0-9]+ [0-9]+ obj"), lit(0))).cast("long")),
+        "n_streams" -> when(valid,
+          size(regexp_extract_all(s, lit("endstream"), lit(0))).cast("long")),
+        "n_pages" -> when(valid,
+          size(regexp_extract_all(s, lit("/Type /Page "), lit(0))).cast("long")),
+        "encrypted" -> when(valid, s.contains("/Encrypt")),
+        "xref_layout" -> when(valid,
+          when(tableAt, "table").when(streamAt, "stream").otherwise("none")),
+        "declared_size" -> when(valid,
+          nullif(regexp_extract(s, "/Size ([0-9]+)", 1), lit("")).cast("long")),
+        "startxref_ok" -> when(valid, sxOk),
+        "header_consistent" -> when(valid, sxOk && s.endsWith("%%EOF")))
     }
 
     /** Deterministic minimal-but-legal PDF skeletons: catalog + pages
@@ -2800,307 +2654,56 @@ object Binary {
     graft.ops.Caching.materialized(out) { withH.unpersist(false) }
   }
 
-  /** Metadata stats over the media table — schema/partitioning surface
-    * checkable against a SQL oracle (payload hashes + sizes).
+  /** The families [[triage]] routes to, by [[Family.label]] — the
+    * labels [[graft.expressions.ContainerDetect]] emits, less `zip`
+    * (an archive listing, not a header parse) and `unknown`.
     */
+  val TriageFamilies: Seq[Family] = Seq(Wav, Png, Jpeg, Bmp, Gif, Pdf, Mp4, Webp,
+    Tiff, Mp3, Flac, Ogg, Mkv, Avro, Parquet, Orc, Gz, Zstd, Ico, Heif)
+
   /** Container triage over a MIXED blob column — the first pass any
     * multimodal ingest runs on 100 TB of unlabeled payloads: detect
     * the container by magic bytes, parse the matching header codec's
-    * fields, and emit one uniform row per blob (detected type, size,
-    * structural validity, and a per-type content measure — audio
-    * milliseconds for WAV, pixels for PNG). Routing happens INSIDE the
-    * projection (both parsers are pure codegen column expressions over
-    * the same payload, gated by the detection CASE), so triage is one
-    * narrow map over the blob scan — no shuffle, no per-type job, no
-    * UDF. Declared media_type metadata is deliberately ignored: at
-    * crawl scale the label lies; the bytes decide.
+    * fields, and emit one uniform row per blob (`doc_id`, `detected`
+    * type, `payload_bytes`, structural `valid`ity, and a per-type
+    * `content_units` measure — audio/video milliseconds, pixels, PDF
+    * pages, records, rows, uncompressed bytes, icons, zip entries).
+    * [[graft.expressions.ContainerDetect]] routes every blob to one
+    * of 21 lanes: the 20 [[TriageFamilies]], zip, or `unknown`
+    * (valid = false, no units). Triage is ONE `select` — one
+    * analysis pass, one codegen projection over the blob scan, no
+    * shuffle, no per-type job, no UDF: each family's `valid` and
+    * `units` Columns sit in the CASE branch of its label, so only
+    * the detected family's expressions run for a row. Declared
+    * media_type metadata is deliberately ignored: at crawl scale the
+    * label lies; the bytes decide.
     */
   def triage(media: DataFrame, payloadCol: String = "payload"): DataFrame = {
     val p = col(payloadCol)
-    // Detection is ONE codegen kernel call (the per-family column
-    // predicates inlined three times through detected/valid/
-    // content_units used to blow the triage projection past janino's
-    // 64 KB method limit and force interpreted fallback — see
-    // ContainerDetectKernel's scaladoc). RIFF is a shared framing:
-    // form type WEBP splits off before the default-audio lane inside
-    // the kernel's ordered decision tree; DetectParitySpec pins the
+    // Detection is ONE codegen kernel call (per-family column
+    // predicates inlined into every CASE condition used to blow the
+    // projection past janino's 64 KB method limit — see
+    // ContainerDetectKernel's scaladoc); DetectParitySpec pins the
     // kernel against the per-family column predicates.
     val detected = org.apache.spark.sql.GraftColumnBridge.column(
       graft.expressions.ContainerDetect(
         org.apache.spark.sql.GraftColumnBridge.expression(p)))
-    val keep = media.columns.map(col)
-    val afterWav = Wav.parse(media, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("duration_ms"): _*)
-    val afterPng = Png.parse(afterWav, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("duration_ms") :+
-        col("png_valid") :+ col("n_pixels").as("png_pixels"): _*)
-    val afterJpeg = Jpeg.parse(afterPng, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("duration_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("n_pixels").as("jpeg_pixels"): _*)
-    val afterBmp = Bmp.parse(afterJpeg, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("duration_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("n_pixels").as("bmp_pixels"): _*)
-    val afterGif = Gif.parse(afterBmp, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("duration_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("n_pixels").as("gif_pixels"): _*)
-    // Mp4.parse also emits `duration_ms` — park the WAV one first
-    val afterPdf = Pdf.parse(afterGif, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("duration_ms").as("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("n_pages"): _*)
-    val afterMp4 = Mp4.parse(afterPdf, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("n_pages") :+
-        col("mp4_valid") :+ col("duration_ms").as("mp4_ms"): _*)
-    val afterWebp = Webp.parse(afterMp4, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("n_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("n_pixels").as("webp_pixels"): _*)
-    val afterTiff = Tiff.parse(afterWebp, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("n_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("n_pixels").as("tiff_pixels"): _*)
-    val afterMp3 = Mp3.parse(afterTiff, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("n_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("duration_ms").as("mp3_ms"): _*)
-    val afterFlac = Flac.parse(afterMp3, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        // park the PDF page count: Ogg.parse emits its own `n_pages`
-        col("pdf_valid") :+ col("n_pages").as("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("duration_ms").as("flac_ms"): _*)
-    val afterOgg = Ogg.parse(afterFlac, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("duration_ms").as("ogg_ms"): _*)
-    val afterMkv = Mkv.parse(afterOgg, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("ogg_ms") :+
-        col("mkv_valid") :+ col("duration_ms").as("mkv_ms"): _*)
-    val afterAvro = Avro.parse(afterMkv, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("ogg_ms") :+
-        col("mkv_valid") :+ col("mkv_ms") :+
-        col("avro_valid") :+ col("n_records").as("avro_records"): _*)
-    val afterParquet = Parquet.parse(afterAvro, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("ogg_ms") :+
-        col("mkv_valid") :+ col("mkv_ms") :+
-        col("avro_valid") :+ col("avro_records") :+
-        col("parquet_valid") :+ col("num_rows").as("parquet_rows"): _*)
-    val afterOrc = Orc.parse(afterParquet, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("ogg_ms") :+
-        col("mkv_valid") :+ col("mkv_ms") :+
-        col("avro_valid") :+ col("avro_records") :+
-        col("parquet_valid") :+ col("parquet_rows") :+
-        col("orc_valid") :+ col("num_rows").as("orc_rows"): _*)
-    val afterGz = Gz.parse(afterOrc, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("ogg_ms") :+
-        col("mkv_valid") :+ col("mkv_ms") :+
-        col("avro_valid") :+ col("avro_records") :+
-        col("parquet_valid") :+ col("parquet_rows") :+
-        col("orc_valid") :+ col("orc_rows") :+
-        col("gzip_valid") :+ col("uncompressed_bytes").as("gz_bytes"): _*)
-    val afterZstd = Zstd.parse(afterGz, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("ogg_ms") :+
-        col("mkv_valid") :+ col("mkv_ms") :+
-        col("avro_valid") :+ col("avro_records") :+
-        col("parquet_valid") :+ col("parquet_rows") :+
-        col("orc_valid") :+ col("orc_rows") :+
-        col("gzip_valid") :+ col("gz_bytes") :+
-        col("zstd_valid") :+ col("uncompressed_bytes").as("zstd_bytes"): _*)
-    val afterIco = Ico.parse(afterZstd, payloadCol)
-      .select(keep :+ col("wav_valid") :+ col("wav_ms") :+
-        col("png_valid") :+ col("png_pixels") :+
-        col("jpeg_valid") :+ col("jpeg_pixels") :+
-        col("bmp_valid") :+ col("bmp_pixels") :+
-        col("gif_valid") :+ col("gif_pixels") :+
-        col("pdf_valid") :+ col("pdf_pages") :+
-        col("mp4_valid") :+ col("mp4_ms") :+
-        col("webp_valid") :+ col("webp_pixels") :+
-        col("tiff_valid") :+ col("tiff_pixels") :+
-        col("mp3_valid") :+ col("mp3_ms") :+
-        col("flac_valid") :+ col("flac_ms") :+
-        col("ogg_valid") :+ col("ogg_ms") :+
-        col("mkv_valid") :+ col("mkv_ms") :+
-        col("avro_valid") :+ col("avro_records") :+
-        col("parquet_valid") :+ col("parquet_rows") :+
-        col("orc_valid") :+ col("orc_rows") :+
-        col("gzip_valid") :+ col("gz_bytes") :+
-        col("zstd_valid") :+ col("zstd_bytes") :+
-        col("ico_valid") :+ col("n_icons").as("ico_icons"): _*)
     val zipEntries = org.apache.spark.sql.GraftColumnBridge.column(
       graft.expressions.ZipEntries(
         org.apache.spark.sql.GraftColumnBridge.expression(p), 1 << 22))
-    // heif rides the zip pattern: ONE struct expression gated by the
-    // detection, no column threading through the chain above
-    val heifMeta = org.apache.spark.sql.GraftColumnBridge.column(
-      graft.expressions.AvifMeta(
-        org.apache.spark.sql.GraftColumnBridge.expression(p)))
-    afterIco
-      .withColumn("__zip", when(detected === "zip", zipEntries))
-      .withColumn("__heif", when(detected === "heif", heifMeta))
-      .select(col("doc_id"), detected.as("detected"),
-        length(p).cast("long").as("payload_bytes"),
-        when(detected === "wav", col("wav_valid"))
-          .when(detected === "png", col("png_valid"))
-          .when(detected === "jpeg", col("jpeg_valid"))
-          .when(detected === "bmp", col("bmp_valid"))
-          .when(detected === "gif", col("gif_valid"))
-          .when(detected === "pdf", col("pdf_valid"))
-          .when(detected === "mp4", col("mp4_valid"))
-          .when(detected === "webp", col("webp_valid"))
-          .when(detected === "tiff", col("tiff_valid"))
-          .when(detected === "mp3", col("mp3_valid"))
-          .when(detected === "flac", col("flac_valid"))
-          .when(detected === "ogg", col("ogg_valid"))
-          .when(detected === "mkv", col("mkv_valid"))
-          .when(detected === "avro", col("avro_valid"))
-          .when(detected === "parquet", col("parquet_valid"))
-          .when(detected === "orc", col("orc_valid"))
-          .when(detected === "gzip", col("gzip_valid"))
-          .when(detected === "zstd", col("zstd_valid"))
-          .when(detected === "ico", col("ico_valid"))
-          .when(detected === "zip", col("__zip").isNotNull)
-          .when(detected === "heif",
-            col("__heif").isNotNull && col("__heif.width").isNotNull)
-          .otherwise(lit(false)).as("valid"),
-        when(detected === "wav", col("wav_ms"))
-          .when(detected === "png", col("png_pixels"))
-          .when(detected === "jpeg", col("jpeg_pixels"))
-          .when(detected === "bmp", col("bmp_pixels"))
-          .when(detected === "gif", col("gif_pixels"))
-          .when(detected === "pdf", col("pdf_pages"))
-          .when(detected === "mp4", col("mp4_ms"))
-          .when(detected === "webp", col("webp_pixels"))
-          .when(detected === "tiff", col("tiff_pixels"))
-          .when(detected === "mp3", col("mp3_ms"))
-          .when(detected === "flac", col("flac_ms"))
-          .when(detected === "ogg", col("ogg_ms"))
-          .when(detected === "mkv", col("mkv_ms"))
-          .when(detected === "avro", col("avro_records"))
-          .when(detected === "parquet", col("parquet_rows"))
-          .when(detected === "orc", col("orc_rows"))
-          .when(detected === "gzip", col("gz_bytes"))
-          .when(detected === "zstd", col("zstd_bytes"))
-          .when(detected === "ico", col("ico_icons"))
-          .when(detected === "zip", size(col("__zip")).cast("long"))
-          .when(detected === "heif",
-            col("__heif.width") * col("__heif.height"))
-          .as("content_units"))
+    def byLane(ofFamily: Family => Column, zip: Column): Column =
+      TriageFamilies.foldLeft(when(detected === "zip", zip)) { (c, f) =>
+        c.when(detected === f.label, ofFamily(f))
+      }
+    media.select(col("doc_id"), detected.as("detected"),
+      length(p).cast("long").as("payload_bytes"),
+      byLane(_.valid(p), zipEntries.isNotNull).otherwise(lit(false)).as("valid"),
+      byLane(_.units(p), size(zipEntries).cast("long")).as("content_units"))
   }
 
+  /** Metadata stats over the media table — schema/partitioning surface
+    * checkable against a SQL oracle (payload hashes + sizes).
+    */
   def metadataStats(docs: DataFrame): DataFrame =
     asMediaTable(docs)
       .select(

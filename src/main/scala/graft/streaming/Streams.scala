@@ -398,9 +398,9 @@ object Streams {
   }
 
   /** Continuous multimodal triage: [[graft.multimodal.Binary.triage]]
-    * applied to a stream of raw blobs. The triage is a pure codegen
-    * projection (magic-byte detection + all three header codecs, no
-    * shuffle), so it runs NATIVELY as a streaming projection — no
+    * applied to a stream of raw blobs. The triage is ONE codegen
+    * projection (magic-byte detection + the detected family's header
+    * codec, no shuffle), so it runs NATIVELY as a streaming projection — no
     * foreachBatch, no state, append mode, restart-safe; this wrapper
     * exists so the ingest-side entry point is one call.
     */
